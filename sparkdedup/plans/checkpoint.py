@@ -24,6 +24,7 @@ from __future__ import annotations
 import json
 import time
 from dataclasses import dataclass, field
+from datetime import datetime
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -157,7 +158,8 @@ def resumable_run(spark: SparkSession, cfg: DedupConfig,
     the T4 resume fixture. A rerun with the same work_dir + config
     resumes from the committed stages.
     """
-    from sparkdedup.plans.pipeline import SearchResult, _distinct_reps
+    from sparkdedup.plans.pipeline import (SearchResult, _distinct_reps,
+                                           _duration)
     from sparkdedup.operators.components import connected_components
     from sparkdedup.operators.containment import containment_edges
     from sparkdedup.operators.exact import exact_edges
@@ -168,6 +170,7 @@ def resumable_run(spark: SparkSession, cfg: DedupConfig,
     from sparkdedup.sources.files import split_invalid
 
     runner = StageRunner(spark, cfg)
+    build_start = datetime.now()
 
     def _check(stage: str) -> None:
         if stop_after == stage:
@@ -182,6 +185,8 @@ def resumable_run(spark: SparkSession, cfg: DedupConfig,
         return build_signatures(spark, cfg, bucket_df)[0]
 
     sigs = runner.bucketed_stage("signatures", valid, featurize)
+    n_sigs = runner.stages[-1].rows   # the stage counts its rows
+    build_end = datetime.now()
     _check("signatures")
 
     def edges_build() -> DataFrame:
@@ -215,10 +220,16 @@ def resumable_run(spark: SparkSession, cfg: DedupConfig,
 
     clusters = runner.stage("clusters",
                             lambda: connected_components(edges))
+    search_end = datetime.now()
     _check("clusters")
 
     ranked = rank_clusters(clusters,
                            sigs.select("file_id", "repo", "path", "n_chars"))
+    # same stats inputs as search_clusters: valid-file count and the
+    # build/search spans (here they include reading resumed stages)
     res = SearchResult(cfg=cfg, edges=edges, clusters=clusters,
-                       ranked=ranked, invalid=invalid)
+                       ranked=ranked, invalid=invalid, _n_files=n_sigs,
+                       _durations={"build": _duration(build_start, build_end),
+                                   "search": _duration(build_end,
+                                                       search_end)})
     return res, runner

@@ -16,8 +16,8 @@ this module is the Spark-native answer:
   featurized once, appended to the ``signatures`` table, and dup edges
   are emitted for collisions WITHIN the batch and AGAINST history:
 
-  - exact: sha256 join against the accumulated signature table, pruned
-    to the sha-prefix partitions the batch actually touches;
+  - exact: sha256 join against the accumulated signature table, the
+    history side semi-joined to the batch's sha256 set first;
   - near (``near_dup=True``): the batch's LSH band keys join against an
     accumulated ``bands`` table (band_id, band_hash, file_id, simhash)
     — only ids+hashes ride the shuffle — then the standard Hamming cut
@@ -49,9 +49,10 @@ partially-committed epoch on disk (e.g. a crash between the bands
 write and the checkpoint commit) never sees those rows as history, so
 the rewrite stays byte-equivalent (round-3 verdict "What's wrong #2").
 
-All table probes and paths are plain URI strings handed to the Spark
-reader — no local-filesystem pathlib — so the module works unchanged
-on HDFS/S3 (round-2 advice).
+Each epoch reads the signature history ONCE (one file index shared by
+the exact and near branches). Table probes list directories through the
+Hadoop ``FileSystem`` on the driver — no Spark job, no local pathlib —
+so the module works unchanged on HDFS/S3 (round-2 advice).
 """
 
 from __future__ import annotations
@@ -69,12 +70,6 @@ from sparkdedup.operators.lsh import (_band_keys, candidate_pairs,
 from sparkdedup.operators.verify import jaccard_edges
 from sparkdedup.plans.pipeline import SIGNATURE_COLS
 from sparkdedup.sources.files import INPUT_SCHEMA, split_invalid
-
-#: number of sha256-prefix hash buckets the signatures table is
-#: partitioned by — the join against history prunes to the buckets a
-#: micro-batch touches (2 hex chars = 256 buckets; at 10^12 files each
-#: bucket is still independently scannable).
-SHA_BUCKETS_PREFIX_LEN = 2
 
 
 def read_file_stream(spark: SparkSession, path: str,
@@ -97,26 +92,25 @@ def stream_signatures(files: DataFrame, cfg: DedupConfig) -> DataFrame:
     return sigs.select(*SIGNATURE_COLS)
 
 
-def _table_exists(spark: SparkSession, path: str) -> bool:
-    """FS-agnostic existence probe: ask the reader, not pathlib —
-    works for file:/hdfs:/s3: URIs alike (round-2 advice)."""
-    try:
-        spark.read.parquet(path).schema
-        return True
-    except AnalysisException:
-        return False
-    except Exception as exc:  # Spark 4 raises connect-style subclasses
-        if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-            return False
-        raise
-
-
 def _hadoop_fs(spark: SparkSession, path: str):
     """(FileSystem, Path) for any Hadoop-FS URI — the same resolution
     the Spark readers use, so compaction works on file:/hdfs:/s3:."""
     jvm = spark._jvm
     hp = jvm.org.apache.hadoop.fs.Path(path)
     return hp.getFileSystem(spark._jsc.hadoopConfiguration()), hp
+
+
+def _table_exists(spark: SparkSession, path: str) -> bool:
+    """True once some ``ingest_batch=`` epoch dir holds a data file.
+
+    One driver-side glob through the Hadoop ``FileSystem`` — no Spark
+    job, and file:/hdfs:/s3: URIs alike. Data files are matched rather
+    than bare epoch dirs so that an epoch whose first write crashed
+    (only ``_temporary/`` on disk) never makes an unreadable table
+    look present."""
+    fs, hp = _hadoop_fs(spark, f"{path.rstrip('/')}/ingest_batch=*/part-*")
+    found = fs.globStatus(hp)
+    return found is not None and len(found) > 0
 
 
 def _snapshot_dir(path: str) -> str:
@@ -184,7 +178,6 @@ _COMPACT_KEYS = {
     "signatures": ["file_id"],
     "bands": ["file_id", "band_id"],
 }
-_COMPACT_PARTITION = {"signatures": ["sha_prefix"]}
 
 
 def compact_logs(spark: SparkSession, out_dir: str,
@@ -249,10 +242,8 @@ def compact_logs(spark: SparkSession, out_dir: str,
                 .groupBy(*keys)
                 .agg(F.max(F.struct(*ordered)).alias("_v"))
                 .select(*keys, *[F.col(f"_v.{c}") for c in ordered]))
-        writer = snap.write.mode("overwrite")
-        if t in _COMPACT_PARTITION:
-            writer = writer.partitionBy(*_COMPACT_PARTITION[t])
-        writer.parquet(f"{_snapshot_dir(path)}/upto={upto}")
+        snap.write.mode("overwrite").parquet(
+            f"{_snapshot_dir(path)}/upto={upto}")
         # reclamation: folded epoch dirs, then superseded snapshots
         if fs.exists(hp):
             for st in fs.listStatus(hp):
@@ -278,12 +269,40 @@ def compact_logs(spark: SparkSession, out_dir: str,
     return done
 
 
+def _exact_vs_history(sigs: DataFrame, sig_hist: DataFrame) -> DataFrame:
+    """Exact edges between a micro-batch and the signature history.
+
+    The history side is semi-joined to the batch's sha256 set BEFORE
+    the per-sha min-id ``groupBy``, so only rows sharing a hash with
+    the batch reach the aggregate — the scan's cost follows the batch,
+    not how the history is laid out on disk. One representative per
+    historical sha: copies of a hash are already mutually connected
+    from the epochs that ingested them, so pairing each new copy with
+    the min-id member keeps components intact and the join linear (a
+    10^6-copy boilerplate sha would otherwise emit 10^6 edges per new
+    copy)."""
+    new = sigs.select(F.col("file_id").alias("dst"), "sha256")
+    hist = (sig_hist.select("file_id", "sha256")
+            .join(new.select("sha256"), "sha256", "left_semi")
+            .groupBy("sha256")
+            .agg(F.min("file_id").alias("src")))
+    return (hist.join(new, "sha256")
+            .filter(F.col("src") != F.col("dst"))
+            .select(F.least("src", "dst").alias("src"),
+                    F.greatest("src", "dst").alias("dst"),
+                    F.lit(0.0).alias("dist"),
+                    F.lit("exact").alias("kind")))
+
+
 def _near_dup_edges(spark: SparkSession, sigs: DataFrame, cfg: DedupConfig,
-                    sig_dir: str, bands_dir: str, batch_id: int) -> DataFrame:
+                    sig_hist: DataFrame | None, bands_dir: str,
+                    batch_id: int) -> DataFrame:
     """Near-dup edges for a micro-batch: within-batch LSH pairs plus
     cross-batch pairs from the accumulated band-key table, verified by
-    the same MinHash-lane machinery as the batch pipeline. Pairs are narrow (src, dst, gen) with the Hamming cut
-    applied where the simhashes are already at hand."""
+    the same MinHash-lane machinery as the batch pipeline. Pairs are
+    narrow (src, dst, gen) with the Hamming cut applied where the
+    simhashes are already at hand. ``sig_hist`` is the epoch's one read
+    of the signature history (``_history``), or None when empty."""
     within = dedup_pairs(candidate_pairs(sigs, cfg))
     keys = _band_keys(cfg)
     batch_bands = explode_bands(sigs, cfg)
@@ -347,7 +366,6 @@ def _near_dup_edges(spark: SparkSession, sigs: DataFrame, cfg: DedupConfig,
     # jaccard_edges is told not to checkpoint again.
     pairs = pairs.localCheckpoint(eager=True)
     mh_batch = sigs.select("file_id", "minhash")
-    sig_hist = _history(spark, sig_dir, batch_id)
     if sig_hist is not None:
         pair_ids = (pairs.select(F.col("src").alias("file_id"))
                     .unionByName(pairs.select(F.col("dst").alias("file_id")))
@@ -456,59 +474,30 @@ def _merge_batch(batch: DataFrame, batch_id: int, cfg: DedupConfig,
     (``upto <= prev_upto``)."""
     spark = batch.sparkSession
     epoch = f"ingest_batch={batch_id}"
-    valid, invalid = split_invalid(batch, cfg)
-    invalid.write.mode("overwrite").parquet(f"{invalid_dir}/{epoch}")
-    sigs = with_signature(
-        with_length_cols(with_sha256(with_file_id(valid))), cfg)
-    # 'p' prefix keeps the partition value non-numeric: Spark's
-    # partition-column type inference would otherwise read an all-digit
-    # epoch (sha_prefix=42) as INT and a later hex one (sha_prefix=4e)
-    # as STRING — conflicting types across directories break the read
-    sigs = (sigs.select(*SIGNATURE_COLS)
-            .withColumn("sha_prefix",
-                        F.concat(F.lit("p"),
-                                 F.substring("sha256", 1,
-                                             SHA_BUCKETS_PREFIX_LEN)))
-            .persist())  # ONE featurize pass feeds every branch below
+    # every action on a foreachBatch DataFrame re-runs the source scan
+    # (and adds to the epoch's numInputRows): cache it so ONE scan feeds
+    # the valid and invalid branches
+    batch = batch.persist()
+    _, invalid = split_invalid(batch, cfg)
+    # ONE featurize pass feeds every branch below
+    sigs = stream_signatures(batch, cfg).persist()
     try:
-        if sigs.count() == 0:
+        invalid.write.mode("overwrite").parquet(f"{invalid_dir}/{epoch}")
+        n_sigs = sigs.count()
+        batch.unpersist()
+        if n_sigs == 0:
             return
-        new = sigs.select("file_id", "sha256", "sha_prefix")
-        # exact edges vs HISTORY: scan only the sha-prefix partitions
-        # this batch touches (partition pruning via the IN filter —
-        # the compaction snapshot is partitioned by sha_prefix too) and
-        # only the two join columns (column pruning)
-        sha_hist = _history(spark, sig_dir, batch_id)
-        if sha_hist is not None:
-            prefixes = [r["sha_prefix"]
-                        for r in new.select("sha_prefix").distinct().collect()]
-            # one representative per historical sha: copies of a hash
-            # are already mutually connected from the epochs that
-            # ingested them, so pairing each new copy with the min-id
-            # member keeps components intact and the join linear (a
-            # 10^6-copy boilerplate sha would otherwise emit 10^6 edges
-            # per new copy)
-            hist = (sha_hist
-                    .filter(F.col("sha_prefix").isin(prefixes))
-                    .groupBy("sha256")
-                    .agg(F.min("file_id").alias("src")))
-            vs_hist = (hist.join(new.select(F.col("file_id").alias("dst"),
-                                            "sha256"), "sha256")
-                       .filter(F.col("src") != F.col("dst"))
-                       .select(F.least("src", "dst").alias("src"),
-                               F.greatest("src", F.col("dst")).alias("dst"),
-                               F.lit(0.0).alias("dist"),
-                               F.lit("exact").alias("kind")))
-        else:
-            vs_hist = None
+        # ONE read of the signature history per epoch: the exact and
+        # near branches share its file index
+        sig_hist = _history(spark, sig_dir, batch_id)
         # edges WITHIN the batch: same star pattern as operators/exact.py
         from sparkdedup.operators.exact import exact_edges
         edges = exact_edges(sigs, cfg)
-        if vs_hist is not None:
-            edges = edges.unionByName(vs_hist)
+        if sig_hist is not None:
+            edges = edges.unionByName(_exact_vs_history(sigs, sig_hist))
         if bands_dir is not None:
             edges = edges.unionByName(_near_dup_edges(
-                spark, sigs, cfg, sig_dir, bands_dir, batch_id))
+                spark, sigs, cfg, sig_hist, bands_dir, batch_id))
         # one row per unordered pair, best (dist, kind) wins — the same
         # dedup the batch pipeline applies before its sink. The struct
         # tie-break matters for IDEMPOTENCY: byte-identical files in one
@@ -528,14 +517,14 @@ def _merge_batch(batch: DataFrame, batch_id: int, cfg: DedupConfig,
         if bands_dir is not None:
             (explode_bands(sigs, cfg)
              .write.mode("overwrite").parquet(f"{bands_dir}/{epoch}"))
-        (sigs.write.mode("overwrite").partitionBy("sha_prefix")
-         .parquet(f"{sig_dir}/{epoch}"))
+        sigs.write.mode("overwrite").parquet(f"{sig_dir}/{epoch}")
         if compact_every > 0 and batch_id > 0 \
                 and batch_id % compact_every == 0:
             # sig_dir is always "<out_dir>/signatures" (incremental_dedup)
             compact_logs(spark, sig_dir.rsplit("/", 1)[0])
     finally:
         sigs.unpersist()
+        batch.unpersist()
 
 
 def incremental_dedup(spark: SparkSession, cfg: DedupConfig,
@@ -557,8 +546,8 @@ def incremental_dedup(spark: SparkSession, cfg: DedupConfig,
     by |snapshot| + |tail| for unbounded ingests; 0 (default) leaves
     compaction to an external maintenance schedule.
     Output layout under ``out_dir`` (each sink partitioned by
-    ``ingest_batch`` for idempotent epoch overwrite):
-    ``signatures/`` (sub-partitioned by sha_prefix), ``edges/`` (exact
+    ``ingest_batch`` for idempotent epoch overwrite; epoch dirs hold
+    parquet files directly): ``signatures/``, ``edges/`` (exact
     AND near rows, one per unordered pair, ``kind`` distinguishes),
     ``clusters/`` (per-epoch deltas; read via ``current_clusters``),
     ``bands/`` (near_dup only), ``invalid/``, ``_checkpoint/`` (Spark

@@ -34,6 +34,25 @@ def test_uninterrupted_equals_plain_pipeline(spark, tmp_path):
     assert _clusters(res) == _clusters(plain)
 
 
+def test_resume_stats_match_batch(spark, tmp_path):
+    """The resumable path reports the same file counts as the batch path
+    in ``stats()`` (the CLI's --work_dir mode writes this document), on
+    a fresh run and on a full resume from committed stages, with a
+    filled build/search duration block."""
+    from sparkdedup.plans.pipeline import run as plain_run
+    cfg = _cfg(tmp_path)
+    files = files_table(spark, n=N, seed=42)
+    plain = plain_run(spark, cfg, files).stats()
+    for _ in range(2):                       # fresh run, then resume
+        got = resumable_run(spark, cfg, files)[0].stats()
+        assert got["total_files"] == plain["total_files"]
+        assert (got["process"]["search"]["files_searched"]
+                == plain["process"]["search"]["files_searched"] > 0)
+        for step in ("build", "search"):
+            assert got["process"][step]["duration"]["seconds_elapsed"] >= 0
+    assert got["total_files"] > got["process"]["search"]["files_searched"]
+
+
 def test_resumable_containment_matches_plain(spark, tmp_path):
     """Regression (round-2 advice): resumable_run at the CLI default
     (similarity='duplicates', containment on) must produce the SAME

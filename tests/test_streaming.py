@@ -63,14 +63,17 @@ def test_incremental_dedup_across_batches(spark, tmp_path):
     # within-batch dup: c.py vs c_dup.py
     assert frozenset((ids["c.py"], ids["c_dup.py"])) in pairs
     assert all(e["kind"] == "exact" and e["dist"] == 0.0 for e in edges)
-    # epoch + sha-prefix partitioning present (idempotent epoch
-    # overwrite; history joins prune on sha_prefix)
+    # flat epoch layout: each ingest_batch= dir (idempotent epoch
+    # overwrite) holds its parquet files directly, no sub-partitions
     sig_root = str(out / "signatures")
     epochs = [p for p in os.listdir(sig_root)
               if p.startswith("ingest_batch=")]
     assert epochs
-    assert any(p.startswith("sha_prefix=")
-               for b in epochs for p in os.listdir(os.path.join(sig_root, b)))
+    for b in epochs:
+        names = os.listdir(os.path.join(sig_root, b))
+        assert any(n.endswith(".parquet") for n in names), (b, names)
+        assert not any(os.path.isdir(os.path.join(sig_root, b, n))
+                       for n in names), (b, names)
 
 
 def test_incremental_near_dup_across_batches(spark, tmp_path):
@@ -270,24 +273,35 @@ def test_exact_chain_across_three_epochs(spark, tmp_path):
 
 
 def _ancestors_contain(plan: str, needles: tuple, marker: str) -> bool:
-    """True if some tree-ancestor line of the first line containing ALL
-    ``needles`` contains ``marker`` (indent-walk over Spark's plan
-    string: an ancestor is the nearest preceding line with smaller
-    indentation, applied transitively to the root)."""
+    """True if EVERY line containing ALL ``needles`` (there is at least
+    one) has a tree-ancestor line containing ``marker`` (indent-walk
+    over Spark's plan string: an ancestor is the nearest preceding line
+    with smaller indentation, applied transitively to the root)."""
     lines = plan.splitlines()
-    idx = next(i for i, ln in enumerate(lines)
-               if all(n in ln for n in needles))
+    hits = [i for i, ln in enumerate(lines) if all(n in ln for n in needles)]
+    assert hits, f"no plan line contains {needles}"
 
     def indent(ln: str) -> int:
         return len(ln) - len(ln.lstrip(" :+-"))
 
-    cur = indent(lines[idx])
-    for i in range(idx - 1, -1, -1):
-        if indent(lines[i]) < cur:
-            if marker in lines[i]:
-                return True
-            cur = indent(lines[i])
-    return False
+    def under_marker(idx: int) -> bool:
+        cur = indent(lines[idx])
+        for i in range(idx - 1, -1, -1):
+            if indent(lines[i]) < cur:
+                if marker in lines[i]:
+                    return True
+                cur = indent(lines[i])
+        return False
+
+    return all(under_marker(i) for i in hits)
+
+
+def _log_dirs(out):
+    return dict(sig_dir=str(out / "signatures"),
+                edges_dir=str(out / "edges"),
+                invalid_dir=str(out / "invalid"),
+                bands_dir=str(out / "bands"),
+                clusters_dir=str(out / "clusters"))
 
 
 def test_near_dup_history_read_is_pruned(spark, tmp_path):
@@ -298,19 +312,11 @@ def test_near_dup_history_read_is_pruned(spark, tmp_path):
     unchanged) and (b) the optimized plan reads the history signatures
     UNDER a semi-join on the candidate-pair ids, so non-candidate rows
     never reach the dedup/verify exchanges."""
-    from sparkdedup.plans.pipeline import SIGNATURE_COLS
-    from sparkdedup.sources.files import split_invalid
-    from sparkdedup.functions.hashing import (with_file_id,
-                                              with_length_cols, with_sha256)
-    from sparkdedup.functions.shingles import with_signature
-    from sparkdedup.streaming.ingest import _merge_batch, _near_dup_edges
+    from sparkdedup.streaming.ingest import (_history, _merge_batch,
+                                             _near_dup_edges)
     cfg = DedupConfig(similarity="similar")
     out = tmp_path / "out"
-    dirs = dict(sig_dir=str(out / "signatures"),
-                edges_dir=str(out / "edges"),
-                invalid_dir=str(out / "invalid"),
-                bands_dir=str(out / "bands"),
-                clusters_dir=str(out / "clusters"))
+    dirs = _log_dirs(out)
     base = ("def compute(a, b):\n"
             "    return a * b + a - b  # some shared logic here\n") * 4
     for epoch in range(3):   # multi-epoch history, mostly non-candidates
@@ -320,14 +326,11 @@ def test_near_dup_history_read_is_pruned(spark, tmp_path):
             rows.append(("r0", "x.py", "c", "python", base))
         _merge_batch(spark.createDataFrame(rows, INPUT_SCHEMA),
                      epoch, cfg, **dirs)
-    batch = spark.createDataFrame(
+    # stream_signatures is the _merge_batch featurize lineage
+    sigs = stream_signatures(spark.createDataFrame(
         [("r9", "x2.py", "c9", "python",
-          base.replace("shared logic", "shared logik"))], INPUT_SCHEMA)
-    valid, _ = split_invalid(batch, cfg)
-    sigs = with_signature(
-        with_length_cols(with_sha256(with_file_id(valid))),
-        cfg).select(*SIGNATURE_COLS)
-    e = _near_dup_edges(spark, sigs, cfg, dirs["sig_dir"],
+          base.replace("shared logic", "shared logik"))], INPUT_SCHEMA), cfg)
+    e = _near_dup_edges(spark, sigs, cfg, _history(spark, dirs["sig_dir"], 3),
                         dirs["bands_dir"], 3)
     plan = e._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("LeftSemi") >= 2        # history + verify prunes
@@ -343,6 +346,92 @@ def test_near_dup_history_read_is_pruned(spark, tmp_path):
     x2 = sigs.select("file_id").collect()[0][0]
     assert {frozenset((r["src"], r["dst"])) for r in rows_out} \
         == {frozenset((ids["x.py"], x2))}
+
+
+def test_exact_history_read_is_semi_joined(spark, tmp_path):
+    """The exact-vs-history join reads the signature history UNDER a
+    left-semi join on the batch's sha256 set (so only rows sharing a
+    hash with the batch reach the min-id aggregate), and a cross-epoch
+    exact edge is still found when its history row was folded into the
+    compaction snapshot."""
+    from sparkdedup.streaming.ingest import (_exact_vs_history, _history,
+                                             _merge_batch, compact_logs)
+    cfg = DedupConfig()
+    out = tmp_path / "out"
+    dirs = _log_dirs(out)
+    same = "def folded(): return 'content ingested before compaction'\n" * 3
+    for epoch in range(3):
+        rows = [(f"r{epoch}", f"u{epoch}_{i}.py", "c", "python",
+                 f"unrelated content {epoch} {i} " * 20) for i in range(4)]
+        if epoch == 0:
+            rows.append(("r0", "x.py", "c", "python", same))
+        _merge_batch(spark.createDataFrame(rows, INPUT_SCHEMA),
+                     epoch, cfg, **dirs)
+    assert compact_logs(spark, str(out))["signatures"] == 1   # x.py folded
+    new_rows = [("r3", "x_copy.py", "c3", "python", same)]
+    sigs = stream_signatures(spark.createDataFrame(new_rows, INPUT_SCHEMA),
+                             cfg)
+    e = _exact_vs_history(sigs, _history(spark, dirs["sig_dir"], 3))
+    plan = e._jdf.queryExecution().optimizedPlan().toString()
+    # snapshot and tail scans both sit under the semi-join on sha256
+    assert _ancestors_contain(plan, ("Relation [", "sha256", "parquet"),
+                              "LeftSemi, (sha256"), plan
+    x_copy = sigs.select("file_id").collect()[0][0]
+    hist = spark.read.parquet(str(out / "signatures_snapshot" / "upto=1"))
+    x = hist.filter(F.col("path") == "x.py").select("file_id").collect()[0][0]
+    want = {(min(x, x_copy), max(x, x_copy), 0.0, "exact")}
+    assert {tuple(r) for r in e.collect()} == want
+    # the full epoch writes the same single cross-epoch edge
+    _merge_batch(spark.createDataFrame(new_rows, INPUT_SCHEMA), 3, cfg,
+                 **dirs)
+    got = spark.read.parquet(f"{dirs['edges_dir']}/ingest_batch=3").collect()
+    assert {tuple(r) for r in got} == want
+
+
+def test_table_exists_probe_runs_no_spark_job(spark, tmp_path):
+    """The history probe lists directories through the Hadoop
+    FileSystem on the driver: a missing path, an empty dir, a dir whose
+    only epoch write never committed, and a committed file: URI log are
+    all answered without launching a Spark job."""
+    from sparkdedup.streaming.ingest import _table_exists
+    sc = spark.sparkContext
+    log = tmp_path / "log"
+    spark.range(3).write.parquet(str(log / "ingest_batch=0"))
+    (tmp_path / "empty").mkdir()
+    (tmp_path / "crashed" / "ingest_batch=0" / "_temporary").mkdir(
+        parents=True)
+    group = "table-exists-probe"
+    sc.setJobGroup(group, "probe")
+    try:
+        spark.range(1).count()                  # the group does see jobs
+        before = set(sc.statusTracker().getJobIdsForGroup(group))
+        assert before
+        assert not _table_exists(spark, str(tmp_path / "missing"))
+        assert not _table_exists(spark, str(tmp_path / "empty"))
+        assert not _table_exists(spark, str(tmp_path / "crashed"))
+        assert _table_exists(spark, f"file://{log}")
+        assert _table_exists(spark, str(log))
+        after = set(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert after == before
+
+
+def test_num_input_rows_counts_each_row_once(spark, tmp_path):
+    """The micro-batch is scanned once for both the valid and invalid
+    branches, so the reported numInputRows equals the epoch file's rows
+    (each extra scan of a foreachBatch DataFrame would add them again)."""
+    src, out = tmp_path / "incoming", tmp_path / "out"
+    files_table(spark, n=30, seed=5).write.parquet(str(src / "b0"))
+    spark.createDataFrame([("r9", "bad.py", "c9", "python", None)],
+                          INPUT_SCHEMA).write.mode("append").parquet(
+                              str(src / "b0"))
+    n_rows = spark.read.parquet(str(src / "b0")).count()
+    q = incremental_dedup(spark, DedupConfig(), str(src / "*"), str(out))
+    _await(q)
+    assert q.recentProgress[-1]["numInputRows"] == n_rows
+    assert spark.read.parquet(str(out / "invalid")).count() >= 1
 
 
 def test_compaction_bounds_history_and_preserves_semantics(spark, tmp_path):
